@@ -92,6 +92,11 @@ def enforce(obs: Observation, rules: tp.Mapping[str, tp.Tuple[Column, str]]) -> 
     return dict(got)
 
 
+# min/max over these types keeps a variable-width aggregation buffer,
+# which forces Spark's keyed aggregate off the hash path
+_BUFFER_TYPES = (T.StringType, T.BinaryType, T.ArrayType, T.MapType, T.StructType)
+
+
 def profile(df: DataFrame, columns: tp.Optional[tp.List[str]] = None) -> DataFrame:
     """One-pass column profile → rows (column, n_rows, n_nulls, n_distinct,
     min_value, max_value, numeric mean/stddev or NULLs).
@@ -109,11 +114,13 @@ def profile(df: DataFrame, columns: tp.Optional[tp.List[str]] = None) -> DataFra
     aggregate forces the whole keyed phase to SortAggregate — two global
     sorts of the expanded (n_distinct_cols+1)×rows set (measured: the
     dominant cost of profiling at every scale; plan in plans/r14/).
-    Min/max of NON-numeric columns therefore compute in a SEPARATE
+    Min/max of columns whose aggregation buffer is not fixed-width
+    (string, binary, array, map, struct) therefore compute in a SEPARATE
     keyless pass (keyless sort-aggregation performs no sort), leaving
-    the expanded dedup aggregate all-mutable — a pure HashAggregate. The
-    one-row frames cross-join back together; every expression, and so
-    every output bit, is unchanged."""
+    the expanded dedup aggregate all-mutable — a pure HashAggregate.
+    Numeric, boolean, date and timestamp min/max stay in the one hash
+    aggregate. The one-row frames cross-join back together; every
+    expression, and so every output bit, is unchanged."""
     from ..functions import davg
 
     cols = columns or df.columns
@@ -130,7 +137,7 @@ def profile(df: DataFrame, columns: tp.Optional[tp.List[str]] = None) -> DataFra
         )
         aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__distinct"))
         is_numeric = isinstance(dt, (T.NumericType,))
-        mm = aggs if is_numeric else str_aggs
+        mm = str_aggs if isinstance(dt, _BUFFER_TYPES) else aggs
         mm.append(F.min(F.col(c)).cast("string").alias(f"{c}__min"))
         mm.append(F.max(F.col(c)).cast("string").alias(f"{c}__max"))
         if is_numeric:

@@ -1775,6 +1775,32 @@ def test_profile_single_pass_stats(spark):
     assert prof["s"].mean_value is None
 
 
+def test_profile_fixed_width_columns_single_hash_aggregate(spark):
+    """Date and numeric min/max keep fixed-width buffers, so a table with
+    no string column profiles in ONE hash aggregate — no keyless second
+    pass and no cross join."""
+    import datetime as dt
+
+    from pypeln_spark.ext import quality as Q
+
+    df = spark.createDataFrame(
+        [(1, dt.date(2024, 3, 1)), (5, dt.date(2023, 1, 9)), (5, None)],
+        "k long, d date",
+    )
+    out = Q.profile(df)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    physical = out._jdf.queryExecution().executedPlan().toString()
+    assert analyzed.count("Aggregate [") == 1, analyzed
+    assert "Join" not in analyzed, analyzed
+    assert "SortAggregate" not in physical, physical
+    assert "NestedLoopJoin" not in physical and "Cartesian" not in physical
+    prof = {r.column: r for r in out.collect()}
+    assert prof["d"].min_value == "2023-01-09"
+    assert prof["d"].max_value == "2024-03-01"
+    assert prof["d"].n_nulls == 1 and prof["d"].n_distinct == 2
+    assert prof["k"].min_value == "1" and prof["k"].max_value == "5"
+
+
 @given(
     rows=st.lists(
         st.tuples(st.sampled_from(["a", "b", "c"]), st.integers(-50, 50)),

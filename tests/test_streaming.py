@@ -948,19 +948,14 @@ def test_stream_sink_root_override_honored(spark, tmp_path, monkeypatch):
 
 
 def test_incremental_lsh_index_compaction_bounds_plan(spark):
-    """Delta-chain compaction (VERDICT r7 #4): absorbing E epochs into an
-    IncrementalLshIndex deepens the lazy union by one leaf per epoch;
-    with compact_every=K the analyzed plan's union width stays BOUNDED
-    forever while the CONTENTS stay identical to the append-only twin —
-    compaction moves rows, never changes them. Since the r13 leveled
-    merge (uncapped indexes keep the base immutable and fold only the
-    delta chain into one LEVEL leaf — compaction cost ∝ absorbed rows,
-    not ∝ index) the bound is base(1) + level(1) + pending(≤ K−1) = 3
-    leaves for K=2, where the full-rewrite form held 2. 5 epochs, K=2 →
-    two compactions exercised (≥ 2K epochs per the done-criterion).
-    Spark flattens chained unionByName into ONE multi-child Union at
-    analysis, so the measurable 'depth' is the LEAF count (each base/
-    delta/checkpointed frame is a LogicalRDD leaf in these plans)."""
+    """Every absorb compacts (VERDICT r7 #4, leveled since r13): the base
+    stays immutable and every absorbed row folds into ONE level leaf, so
+    after EVERY absorb each side's analyzed plan holds at most 2 leaves
+    (base + level) while its CONTENTS equal the naive base ∪ deltas
+    union — compaction moves rows, never changes them. Spark flattens
+    chained unionByName into ONE multi-child Union at analysis, so the
+    measurable 'depth' is the LEAF count (each base/checkpointed frame
+    is a LogicalRDD leaf in these plans)."""
     from pypeln_spark.ext import dedup as D
 
     def mk_docs(ids, tag):
@@ -972,24 +967,25 @@ def test_incremental_lsh_index_compaction_bounds_plan(spark):
     def leaves(df):
         return df._jdf.queryExecution().analyzed().toString().count("LogicalRDD")
 
-    base_sh, base_bands, _ = D.build_corpus_index(mk_docs(range(0, 6, 2), "base"))
-    plain = D.IncrementalLshIndex(base_sh, base_bands, compact_every=0)
-    comp = D.IncrementalLshIndex(base_sh, base_bands, compact_every=2)
-    for e in range(1, 6):
-        delta = mk_docs(range(100 * e, 100 * e + 3), f"epoch{e}")
-        for idx in (plain, comp):
-            d_sh, d_bands, _ = D.build_corpus_index(delta)
-            idx.absorb(d_sh, d_bands)
-        assert leaves(plain.sh) == 1 + e  # append-only: one leaf per epoch
-        # leveled bound: base + level + (K-1) pending deltas
-        assert leaves(comp.sh) <= 3 and leaves(comp.bands) <= 3
     key = lambda r: (r["doc_id"], str(sorted(r.asDict().items())))  # noqa: E731
-    for attr in ("sh", "bands"):
-        got = sorted(getattr(comp, attr).collect(), key=key)
-        want = sorted(getattr(plain, attr).collect(), key=key)
-        assert got == want, f"compaction changed {attr} contents"
-    plain.close()
-    comp.close()
+    base_sh, base_bands, _ = D.build_corpus_index(mk_docs(range(0, 6, 2), "base"))
+    idx = D.IncrementalLshIndex(base_sh, base_bands)
+    naive = {"sh": base_sh, "bands": base_bands}
+    for e in range(1, 6):
+        d_sh, d_bands, _ = D.build_corpus_index(
+            mk_docs(range(100 * e, 100 * e + 3), f"epoch{e}")
+        )
+        idx.absorb(d_sh, d_bands)
+        naive = {
+            "sh": naive["sh"].unionByName(d_sh),
+            "bands": naive["bands"].unionByName(d_bands),
+        }
+        for attr in ("sh", "bands"):
+            view = getattr(idx, attr)
+            assert leaves(view) <= 2, (e, attr, leaves(view))
+            got = sorted(view.collect(), key=key)
+            want = sorted(naive[attr].collect(), key=key)
+            assert got == want, f"epoch {e}: compaction changed {attr} contents"
 
 
 def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
@@ -999,7 +995,7 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
     across a mid-stream rebuild_bands (the watermark: rows absorbed
     before a rebuild are band-covered by the rebuilt table and must not
     contribute band rows again after the next merge). Leaf bound holds
-    (base + level + pending)."""
+    (base + level)."""
     from pyspark.sql import functions as F
 
     from pypeln_spark.ext import dedup as D
@@ -1018,8 +1014,8 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
     base_sh, base_bands = frames(range(0, 6, 2), "base")
     base_sh = base_sh.localCheckpoint(eager=True)
     base_bands = base_bands.localCheckpoint(eager=True)
-    classic = D.IncrementalLshIndex(base_sh, base_bands, compact_every=2)
-    comb = D.IncrementalLshIndex(base_sh, base_bands, compact_every=2)
+    classic = D.IncrementalLshIndex(base_sh, base_bands)
+    comb = D.IncrementalLshIndex(base_sh, base_bands)
     sh_p = lambda c: c.select("vec_id", "sh_arr")  # noqa: E731
     bd_p = lambda c: c.select("vec_id", "bucket")  # noqa: E731
     for e in range(1, 6):
@@ -1028,7 +1024,7 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
         comb.absorb_combined(
             d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p
         )
-        assert leaves(comb.sh) <= 3 and leaves(comb.bands) <= 3
+        assert leaves(comb.sh) <= 2 and leaves(comb.bands) <= 2
         if e == 3:
             # mid-stream band rebuild under a NEW geometry (mod 5): both
             # indexes re-derive the whole band side from their sh view
@@ -1051,8 +1047,6 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
         classic.absorb_combined(
             d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p
         )
-    classic.close()
-    comb.close()
 
 
 def test_embedding_index_rebucket_widens_mid_stream(spark):
@@ -1096,17 +1090,15 @@ def test_embedding_index_rebucket_widens_mid_stream(spark):
         r.vec_id: r.bucket for r in frames(all_vecs, 10)[1].collect()
     }
     got = {r.vec_id: r.bucket for r in wide.collect()}
-    idx.close()
     assert got == fresh  # identical to having started at 10 planes
     assert len(got) == 55
 
 
 def test_incremental_index_random_schedules_property(spark):
     """Property form of the compaction contract: for ANY absorb schedule
-    and ANY compact_every (including mid-stream manual compact() calls),
-    the index contents equal the naive base∪deltas union. Hypothesis
-    drives the schedule; frames are tiny key/value pairs so each example
-    is a handful of local jobs."""
+    (including empty deltas) the index contents equal the naive
+    base∪deltas union. Hypothesis drives the schedule; frames are tiny
+    key/value pairs so each example is a handful of local jobs."""
     from hypothesis import given, settings, strategies as st
 
     from pypeln_spark.ext import dedup as D
@@ -1119,65 +1111,30 @@ def test_incremental_index_random_schedules_property(spark):
     @settings(max_examples=8, deadline=None)
     @given(
         sizes=st.lists(st.integers(min_value=0, max_value=3), min_size=1, max_size=5),
-        k=st.integers(min_value=0, max_value=3),
-        manual=st.booleans(),
     )
-    def prop(sizes, k, manual):
+    def prop(sizes):
         base = mk(range(10), "base")
-        idx = D.IncrementalLshIndex(base, base, compact_every=k)
+        idx = D.IncrementalLshIndex(base, base)
         expect = {(i, f"base{i}") for i in range(10)}
         nxt = 100
-        for step, sz in enumerate(sizes):
+        for sz in sizes:
             ids = range(nxt, nxt + sz)
             nxt += 10
             idx.absorb(mk(ids, "d"), mk(ids, "d"))
             expect |= {(i, f"d{i}") for i in ids}
-            if manual and step == len(sizes) // 2:
-                idx.compact()
         got = {(r.doc_id, r.payload) for r in idx.sh.collect()}
         got_b = {(r.doc_id, r.payload) for r in idx.bands.collect()}
-        idx.close()
         assert got == expect and got_b == expect
 
     prop()
 
 
-def test_incremental_lsh_index_auto_compaction_tracks_ratio(spark):
-    """compact_every="auto" (VERDICT r9 #3): K is re-derived on every
-    absorb from the LIVE index/batch row ratio at the MEASURED knee
-    boundaries (K=1 below 50x — full rewrite beats a deepening union;
-    K=4 across the measured 50-100x convergence zone; K=8 past 100x),
-    and index contents stay identical to the naive union — auto moves
-    only WALL time, never rows. The synthetic stream drives the ratio
-    across both boundaries in three absorbs."""
-    from pypeln_spark.ext import dedup as D
-
-    def mk(ids, tag):
-        return spark.createDataFrame(
-            [(i, f"{tag}{i}") for i in ids], "doc_id long, payload string"
-        )
-
-    base = mk(range(600), "base")
-    idx = D.IncrementalLshIndex(base, base, compact_every="auto")
-    expect = {(i, f"base{i}") for i in range(600)}
-    # (batch size, expected K): 600/100=6x -> 1; 700/12=58x -> 4;
-    # 712/6=119x -> 8  (pre-absorb index rows / batch rows)
-    for start, n, want_k in ((1000, 100, 1), (2000, 12, 4), (3000, 6, 8)):
-        ids = range(start, start + n)
-        idx.absorb(mk(ids, "d"), mk(ids, "d"))
-        assert idx.compact_every == want_k, (n, idx.compact_every)
-        expect |= {(i, f"d{i}") for i in ids}
-    got = {(r.doc_id, r.payload) for r in idx.sh.collect()}
-    idx.close()
-    assert got == expect
-
-
 def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch):
     """End-to-end half of the compaction contract: the registry ingest
-    gate emits IDENTICAL keep/drop decisions with compaction forced every
-    epoch (K=1, the most aggressive setting) as with the append-only
-    default — including the cross-epoch absorption matches, which read
-    the compacted index."""
+    gates catch the planted cross-epoch absorption matches, which read
+    the compacted index, and the durable text gate emits IDENTICAL
+    decisions to the in-session one while its manifest recovers the
+    final index from the durable files alone."""
     from pypeln_spark.ext import similarity as S
     from pypeln_spark.queries import REGISTRY
 
@@ -1204,21 +1161,8 @@ def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch
         S.drop_index()
         return sorted(map(tuple, REGISTRY[name].fn(spark, sf).collect()))
 
-    # pin BOTH arms explicitly: append-only (0) vs every-epoch compaction
-    # (1, the measured r9 default) — the gates' env default is now 1, so
-    # relying on the default here would compare 1 against 1
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "0")
     base_txt = run("streaming_incremental_dedup")
     base_emb = run("streaming_embedding_ingest")
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "1")
-    assert run("streaming_incremental_dedup") == base_txt
-    assert run("streaming_embedding_ingest") == base_emb
-    # r10 (VERDICT r9 #3): "auto" — K re-derived per absorb from the live
-    # index/batch ratio — must emit the same decisions as any fixed K
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "auto")
-    assert run("streaming_incremental_dedup") == base_txt
-    assert run("streaming_embedding_ingest") == base_emb
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "1")
     # the planted absorb matches must actually be present in both gates
     assert any(r[0] == 3 and r[2] == 7 for r in base_txt)
     assert any(r[0] == 3 and r[2] == 7 for r in base_emb)
@@ -1258,12 +1202,13 @@ def test_incremental_index_durable_checkpoint(spark, tmp_path):
     """ADVICE r8 + VERDICT r13 #6: localCheckpoint blocks are
     non-recomputable after executor loss, so unbounded cluster gates need
     a DURABLE target. Under the r14 GENERATION CHAIN, checkpoint_dir
-    holds a one-time BASE copy per side, delta/level files (compaction
-    writes only absorbed rows — never the corpus again), and
-    MANIFEST.json naming the live set; recovery = the manifest's union
-    (IncrementalLshIndex.recover), no session state consulted. Superseded
-    files are removed only after the manifest publishing the successor
-    lands — a crash leaks a file, never loses data."""
+    holds a one-time BASE copy per side, ONE level file per side
+    (every absorb rewrites only absorbed rows — never the corpus again),
+    and MANIFEST.json naming the live set; recovery = the manifest's
+    union (IncrementalLshIndex.recover), no session state consulted.
+    Superseded levels are removed only after the manifest publishing
+    the successor lands — so after EVERY absorb the directory holds
+    exactly those five entries and recovers the live index."""
     import json
 
     from pypeln_spark.ext import dedup as D
@@ -1276,51 +1221,35 @@ def test_incremental_index_durable_checkpoint(spark, tmp_path):
             [(i, f"{tag}{i}") for i in ids], "doc_id long, payload string"
         )
 
-    def sides():
-        names = sorted(os.listdir(ckpt))
-        return (
-            [n for n in names if n.startswith("sh_")],
-            [n for n in names if n.startswith("bands_")],
-        )
+    def rows(df):
+        return {(r.doc_id, r.payload) for r in df.collect()}
 
+    base = {(i, f"b{i}") for i in range(5)}
     idx = D.IncrementalLshIndex(
-        mk(range(5), "b"), mk(range(5), "b"),
-        compact_every=2, checkpoint_dir=ckpt,
+        mk(range(5), "b"), mk(range(5), "b"), checkpoint_dir=ckpt,
     )
-    idx.absorb(mk(range(10, 13), "d"), mk(range(10, 13), "d"))
-    # first absorb: base copy written ONCE + the durable delta append,
-    # manifest names both
-    sh_d, bd_d = sides()
-    assert sh_d == ["sh_00001", "sh_base"] and bd_d == ["bands_00002", "bands_base"]
-    m = json.load(open(os.path.join(ckpt, "MANIFEST.json")))
-    assert [os.path.basename(p) for p in m["sh"]] == ["sh_base", "sh_00001"]
-    idx.absorb(mk(range(20, 22), "e"), mk(range(20, 22), "e"))
-    # second absorb hit compact_every=2: the LEVEL (absorbed rows only)
-    # replaced the delta files; the base copy is untouched — the corpus
-    # is never rewritten (the generation-chain point)
-    sh_d, bd_d = sides()
-    assert len(sh_d) == 2 and len(bd_d) == 2, (sh_d, bd_d)
-    assert "sh_base" in sh_d and "bands_base" in bd_d
-    want = (
-        {(i, f"b{i}") for i in range(5)}
-        | {(i, f"d{i}") for i in range(10, 13)}
-        | {(i, f"e{i}") for i in range(20, 22)}
-    )
-    lvl = [n for n in sh_d if n != "sh_base"][0]
-    got_lvl = {
-        (r.doc_id, r.payload)
-        for r in spark.read.parquet(os.path.join(ckpt, lvl)).collect()
-    }
-    assert got_lvl == want - {(i, f"b{i}") for i in range(5)}  # absorbed only
-    assert {(r.doc_id, r.payload) for r in idx.sh.collect()} == want
-    assert {(r.doc_id, r.payload) for r in idx.bands.collect()} == want
-    # recovery from the durable dir ALONE — fresh frames, no session state
-    rec_sh, rec_bands = D.IncrementalLshIndex.recover(spark, ckpt)
-    assert {(r.doc_id, r.payload) for r in rec_sh.collect()} == want
-    assert {(r.doc_id, r.payload) for r in rec_bands.collect()} == want
-    # the durable dirs are the deployment's index state: close() keeps them
-    idx.close()
-    assert sides() == ((sh_d), (bd_d))
+    want = set(base)
+    for e, ids in enumerate((range(10, 13), range(20, 22), range(30, 34))):
+        tag = "d" if e % 2 == 0 else "e"
+        idx.absorb(mk(ids, tag), mk(ids, tag))
+        want |= {(i, f"{tag}{i}") for i in ids}
+        names = sorted(os.listdir(ckpt))
+        lvl_sh = [n for n in names if n.startswith("sh_") and n != "sh_base"]
+        lvl_bd = [n for n in names if n.startswith("bands_") and n != "bands_base"]
+        assert len(lvl_sh) == 1 and len(lvl_bd) == 1, names
+        assert names == sorted(
+            ["MANIFEST.json", "sh_base", "bands_base", lvl_sh[0], lvl_bd[0]]
+        ), names
+        m = json.load(open(os.path.join(ckpt, "MANIFEST.json")))
+        assert [os.path.basename(p) for p in m["sh"]] == ["sh_base", lvl_sh[0]]
+        assert [os.path.basename(p) for p in m["bands"]] == ["bands_base", lvl_bd[0]]
+        # the level holds absorbed rows only — the corpus is never rewritten
+        assert rows(spark.read.parquet(os.path.join(ckpt, lvl_sh[0]))) == want - base
+        assert rows(idx.sh) == want and rows(idx.bands) == want
+        # recovery from the durable dir ALONE equals the live index
+        rec_sh, rec_bands = D.IncrementalLshIndex.recover(spark, ckpt)
+        assert rows(rec_sh) == rows(idx.sh)
+        assert rows(rec_bands) == rows(idx.bands)
 
 
 def test_embedding_gate_rejects_non_hysteretic_config():
@@ -1386,7 +1315,6 @@ def test_embedding_gate_occupancy_trigger(spark, tmp_path):
             for r in spark.read.parquet(root).collect()
         }
         D.retire_pipeline_caches()
-        idx.close()
         return gate, out
 
     fixed_gate, fixed_out = run(False)
@@ -1451,7 +1379,6 @@ def test_cell_gate_matches_hyperplane_at_high_threshold(spark, tmp_path):
             for r in spark.read.parquet(root).collect()
         }
         D.retire_pipeline_caches()
-        idx.close()
         return out
 
     root_h = str(tmp_path / "hyper")
@@ -1539,7 +1466,6 @@ def test_cell_gate_occupancy_retrain(spark, tmp_path):
             for r in spark.read.parquet(root).collect()
         }
         D.retire_pipeline_caches()
-        idx.close()
         return gate, out
 
     fixed_gate, fixed_out = run(False)
@@ -1710,7 +1636,7 @@ def test_incremental_index_bucket_cap_bounds_width(spark):
         )
 
     base = bands([(3, 10, [1, 2]), (4, 10, [1, 2]), (7, 10, [1, 2]), (9, 20, [9])])
-    idx = D.IncrementalLshIndex(sh([3, 4, 7, 9]), base, compact_every=1, bucket_cap=2)
+    idx = D.IncrementalLshIndex(sh([3, 4, 7, 9]), base, bucket_cap=2)
     # init: bucket 10 keeps lowest ids {3,4}; 7 evicted; singleton untouched
     assert {(r.doc_id, r.sigh) for r in idx.bands.collect()} == {
         (3, 10), (4, 10), (9, 20)
@@ -1722,7 +1648,6 @@ def test_incremental_index_bucket_cap_bounds_width(spark):
     }
     # the sh side is NEVER capped — it is the corpus record
     assert {r.doc_id for r in idx.sh.collect()} == {1, 3, 4, 7, 9}
-    idx.close()
 
 
 def test_text_gate_bucket_cap_exact_dup_decisions_identical(spark, tmp_path):
@@ -1752,12 +1677,11 @@ def test_text_gate_bucket_cap_exact_dup_decisions_identical(spark, tmp_path):
             "doc_id", BANDS, N_HASHES // BANDS,
         )
         idx = D.IncrementalLshIndex(
-            cor_sh, cor_bands, compact_every=1, bucket_cap=cap
+            cor_sh, cor_bands, bucket_cap=cap
         )
         gate = D.TextIngestGate(idx, root, N_HASHES, BANDS, 5, 0.5)
         for e, rows in enumerate(epochs):
             gate(spark.createDataFrame(rows, "doc_id long, text string"), e)
-        idx.close()
         out = {
             (r.doc_id, r.epoch, r.dup_of, r.jaccard)
             for r in spark.read.parquet(root).collect()
@@ -1813,11 +1737,10 @@ def test_text_gate_decisions_broadcast_threshold_invariant(spark, tmp_path):
                 D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
                 "doc_id", BANDS, N_HASHES // BANDS,
             )
-            idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+            idx = D.IncrementalLshIndex(cor_sh, cor_bands)
             gate = D.TextIngestGate(idx, root, N_HASHES, BANDS, 5, 0.5)
             for e, rows in enumerate(epochs):
                 gate(spark.createDataFrame(rows, "doc_id long, text string"), e)
-            idx.close()
             out = sorted(
                 (r.doc_id, r.epoch, r.dup_of, r.jaccard)
                 for r in spark.read.parquet(root).collect()
@@ -1869,7 +1792,7 @@ def test_text_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path)
             D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
             "doc_id", BANDS, N_HASHES // BANDS,
         )
-        idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+        idx = D.IncrementalLshIndex(cor_sh, cor_bands)
         gate = D.TextIngestGate(
             idx, root, N_HASHES, BANDS, 5, 0.5, absorb_dedup=absorb_dedup
         )
@@ -1880,7 +1803,6 @@ def test_text_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path)
             F.col("doc_id").between(1000, 1499)
         ).count()
         distinct_sh = idx.sh.filter(F.col("doc_id") >= 1500).count()
-        idx.close()
         out = {
             (r.doc_id, r.epoch, r.dup_of, r.jaccard)
             for r in spark.read.parquet(root).collect()
@@ -1933,7 +1855,7 @@ def test_gate_sink_schema_guard_refuses_mixed_schema_append(spark, tmp_path):
             D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
             "doc_id", BANDS, N_HASHES // BANDS,
         )
-        idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+        idx = D.IncrementalLshIndex(cor_sh, cor_bands)
         return D.TextIngestGate(
             idx, root, N_HASHES, BANDS, 5, 0.5, absorb_dedup=absorb_dedup
         )
@@ -2064,7 +1986,6 @@ def test_embedding_gate_reports_within_batch_duplicate_mass(spark, tmp_path):
     )
     gate(clean, 0)
     gate(flood, 1)
-    idx.close()
     D.retire_pipeline_caches()
     assert [s["n_batch_dup"] for s in gate.stats] == [0, 5]
 
@@ -2096,14 +2017,13 @@ def test_text_gate_reports_within_batch_duplicate_mass(spark, tmp_path):
         D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
         "doc_id", BANDS, N_HASHES // BANDS,
     )
-    idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+    idx = D.IncrementalLshIndex(cor_sh, cor_bands)
     gate = D.TextIngestGate(
         idx, str(tmp_path / "sink"), N_HASHES, BANDS, 5, 0.5,
         collect_stats=True,
     )
     for e, rows in enumerate(epochs):
         gate(spark.createDataFrame(rows, "doc_id long, text string"), e)
-    idx.close()
     D.retire_pipeline_caches()
     assert [(s["n_new"], s["n_batch_dup"]) for s in gate.stats] == [
         (2, 0), (5, 3),
@@ -2153,7 +2073,6 @@ def test_embedding_gate_identical_vector_cluster_cap_vs_widen(spark, tmp_path):
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
-            compact_every=1,
             bucket_cap=cap,
         )
         gate = S.EmbeddingIngestGate(
@@ -2176,7 +2095,6 @@ def test_embedding_gate_identical_vector_cluster_cap_vs_widen(spark, tmp_path):
         }
         widened = any(s["widened"] for s in gate.stats)
         D.retire_pipeline_caches()
-        idx.close()
         return out, cluster_band_rows, min_survives, widened
 
     wide_out, wide_rows, _, wide_widened = run(None, True, "widen")
@@ -2252,7 +2170,6 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
-            compact_every=1,
             bucket_cap=cap,
         )
         gate = S.CellEmbeddingIngestGate(
@@ -2278,7 +2195,6 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
             for r in spark.read.parquet(root).collect()
         }
         D.retire_pipeline_caches()
-        idx.close()
         return out, cluster_width, min_survives
 
     un_out, un_width, _ = run(None, "uncapped")
@@ -2346,7 +2262,6 @@ def test_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path):
         )
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            compact_every=1,
         )
         gate = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2364,7 +2279,6 @@ def test_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path):
             for r in spark.read.parquet(str(tmp_path / tag)).collect()
         }
         D.retire_pipeline_caches()
-        idx.close()
         return out, cluster_sh, cluster_bands, distinct_sh
 
     plain, p_sh, p_b, p_d = run(False, "plain")
@@ -2412,7 +2326,6 @@ def test_cells_gate_auto_nprobe_resolves_measured_rule(spark, tmp_path):
         )
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            compact_every=1,
         )
         g = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2439,8 +2352,6 @@ def test_cells_gate_auto_nprobe_resolves_measured_rule(spark, tmp_path):
     }
     assert rows("lo") == rows("ex")
     assert (200, 0, 0) in rows("lo")  # the planted exact dup is caught
-    for i in (i1, i2, i3):
-        i.close()
     D.retire_pipeline_caches()
 
 
@@ -2472,7 +2383,7 @@ def test_cells_gate_one_join_verify_matches_two_frame_path(spark, tmp_path):
         ).localCheckpoint(eager=True)
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            compact_every=1, comb=cor if with_comb else None,
+            comb=cor if with_comb else None,
         )
         g = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2506,8 +2417,6 @@ def test_cells_gate_one_join_verify_matches_two_frame_path(spark, tmp_path):
     )
     assert rows("onejoin") == rows("classic")
     assert any(d is not None for (_, _, d, _) in rows("onejoin"))
-    i1.close()
-    i2.close()
     D.retire_pipeline_caches()
 
 
@@ -2515,9 +2424,8 @@ def test_incremental_index_bucket_cap_history_independent_property(spark):
     """The docstring's history-independence claim, property-tested: with
     min-id priority, the post-compaction capped band view equals the
     cap-lowest ids per bucket over EVERYTHING ever absorbed — for ANY
-    absorb schedule, any interleaving of manual compactions, and any cap.
-    (Mid-cycle the view may legitimately carry uncapped deltas; the claim
-    is about the view right after a compact().)"""
+    absorb schedule and any cap (every absorb compacts, so the claim
+    holds after each one; empty epochs absorb nothing)."""
     from hypothesis import given, settings, strategies as st
 
     from pypeln_spark.ext import dedup as D
@@ -2547,9 +2455,8 @@ def test_incremental_index_bucket_cap_history_independent_property(spark):
             max_size=4,
         ),
         cap=st.integers(min_value=1, max_value=3),
-        k=st.integers(min_value=1, max_value=3),
     )
-    def prop(epochs, cap, k):
+    def prop(epochs, cap):
         base_rows = [(0, 0), (1, 0), (2, 1), (3, 1), (4, 2)]
         # unique doc ids across base + all epochs
         seen_ids = {i for i, _ in base_rows}
@@ -2561,14 +2468,13 @@ def test_incremental_index_bucket_cap_history_independent_property(spark):
             clean_epochs.append(dedup_rows)
 
         idx = D.IncrementalLshIndex(
-            sh(base_rows), bands(base_rows), compact_every=k, bucket_cap=cap
+            sh(base_rows), bands(base_rows), bucket_cap=cap
         )
         everything = list(base_rows)
         for rows in clean_epochs:
             if rows:
                 idx.absorb(sh(rows), bands(rows))
             everything += rows
-        idx.compact()
         got = {(r.doc_id, r.sigh) for r in idx.bands.collect()}
         by_bucket: dict = {}
         for i, b in everything:
@@ -2576,7 +2482,6 @@ def test_incremental_index_bucket_cap_history_independent_property(spark):
         want = {
             (i, b) for b, ids in by_bucket.items() for i in sorted(ids)[:cap]
         }
-        idx.close()
         assert got == want, (got, want)
 
     prop()

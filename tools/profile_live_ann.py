@@ -33,7 +33,7 @@ def main() -> int:
     from pypeln_spark.queries.similarity import (
         DIM, K, KMEANS_ITERS, KMEANS_TRAIN_MOD, N_CELLS, NEAR_DUP_T,
     )
-    from pypeln_spark.queries.streaming import LIVE_RETRAIN_CELLS, _compact_epochs
+    from pypeln_spark.queries.streaming import LIVE_RETRAIN_CELLS
 
     spark = get_spark(app_name="profile_live_ann")
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -72,7 +72,6 @@ def main() -> int:
         index = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
-            compact_every=_compact_epochs(),
             checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
             comb=cor,
         )
@@ -121,7 +120,6 @@ def main() -> int:
 
         timed("harness_total", lambda: ST.staged_foreach_batch(spark, epochs, body))
         D.retire_pipeline_caches()
-        index.close()
         timed("readback", lambda: spark.read.parquet(serve_root)
               .localCheckpoint(eager=True))
         ST.remove_sink_dir(spark, serve_root)
