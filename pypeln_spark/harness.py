@@ -24,6 +24,16 @@ iterator UDFs:
 Elements cross the JVM↔Python boundary as Arrow batches (vectorized), not
 pickled one-at-a-time queue puts — the single biggest perf win over the
 reference's design at scale.
+
+Lowering (``lower``): each general-path ``map``/``filter``/``flat_map``/
+``each`` builds its apply with ``make_apply`` and hands it to ``lower``. A
+run of consecutive such operators becomes ONE ``mapInPandas`` over the
+run's original input whose function pipes the batches through every apply
+in turn — one Python worker per task and one Arrow round trip for the
+whole run, where the reference has one worker pool per stage. Each apply
+stays its own generator, so every operator keeps its own lifecycle hooks,
+DI, timeout and mode; they now share a task's process instead of each
+having one.
 """
 
 from __future__ import annotations
@@ -33,6 +43,7 @@ import concurrent.futures as cf
 import inspect
 import typing as tp
 
+import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import types as T
@@ -73,6 +84,18 @@ class _Dropped:
 
 
 _DROPPED = _Dropped()
+
+
+def _plain(v: tp.Any) -> tp.Any:
+    """Arrow hands array values to pandas as numpy arrays (maps and structs
+    as dicts holding them); turn them back into the Python lists an
+    operator gets when its input comes from the previous apply of the same
+    fused chain, so f sees one value whichever boundary it sits behind."""
+    if isinstance(v, np.ndarray):
+        return [_plain(e) for e in v] if v.dtype == object else v.tolist()
+    if isinstance(v, dict):
+        return {k: _plain(e) for k, e in v.items()}
+    return v
 
 
 def make_apply(
@@ -116,7 +139,7 @@ def make_apply(
         )
 
         def decode(v):
-            return infer.loads(v) if in_pickled else v
+            return infer.loads(v) if in_pickled else _plain(v)
 
         def encode(v):
             return infer.dumps(v) if out_pickled else v
@@ -233,10 +256,13 @@ def make_apply(
             idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
             vals = pdf[VALUE_COL].tolist()
 
-            async def pred(raw):
+            async def pred(idx, raw):
+                kw = dict(f_kwargs)
+                if wants_index:
+                    kw["element_index"] = tuple(idx) if idx is not None else None
                 async with sem:
                     try:
-                        res = f(decode(raw), **f_kwargs)
+                        res = f(decode(raw), **kw)
                         if inspect.isawaitable(res):
                             if timeout:
                                 res = await asyncio.wait_for(res, timeout)
@@ -248,7 +274,7 @@ def make_apply(
                         # watchdog's _DROPPED semantics
                         return False
 
-            mask = await asyncio.gather(*[pred(v) for v in vals])
+            mask = await asyncio.gather(*[pred(i, v) for i, v in zip(idxs, vals)])
             return pdf[pd.Series(list(mask), index=pdf.index)]
 
         loop = asyncio.new_event_loop() if (is_coro or is_async_gen) else None
@@ -288,6 +314,38 @@ def make_apply(
                 io_pool.shutdown(wait=False)
 
     return apply
+
+
+def lower(stage, fn: tp.Callable, schema: T.StructType, out_pickled: bool):
+    """Apply ``fn`` (from ``make_apply``) to ``stage`` as a Python pass.
+
+    When ``stage`` came from ``lower`` itself, ``fn`` joins its chain and the
+    result is ONE ``mapInPandas`` of the whole chain over the chain's
+    original input. The chain is a tuple, so a Stage feeding several
+    operators hands each its own copy. A cached DataFrame starts a new
+    chain, so the cache is read rather than recomputed.
+    """
+    from .stage import Stage
+
+    if stage.chain is not None and not stage.df.is_cached:
+        base, fns = stage.chain
+        fns = fns + (fn,)
+    else:
+        cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
+        base, fns = stage.df.select(*cols), (fn,)
+
+    def fused(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
+        for apply in fns:
+            batches = apply(batches)
+        return batches
+
+    return Stage(
+        base.mapInPandas(fused, schema=schema),
+        scalar=True,
+        pickled=out_pickled,
+        chain=(base, fns),
+        in_order=stage.in_order,
+    )
 
 
 def decode_pickled(stage):

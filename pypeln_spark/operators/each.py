@@ -1,8 +1,10 @@
 """each — side-effect sink, emits nothing
 (reference: pypeln/process/api/each.py:18-141).
 
-Lowering: the harness with ``kind="each"`` (f runs, zero rows out) so that
-on_start/on_done, DI and timeout all behave exactly like map's; with
+Lowering: a harness apply with ``kind="each"`` (f runs, zero rows out),
+handed to ``harness.lower`` like map's, so on_start/on_done, DI and timeout
+behave exactly like map's and the apply shares the input chain's
+``mapInPandas``; with
 ``run=True`` the empty result is drained immediately through Spark's noop
 sink — the analogue of the reference's eager self-iteration
 (each.py:137-141). The open/process/close contract of Spark's ForeachWriter
@@ -15,7 +17,7 @@ import typing as tp
 
 from .. import harness
 from ..stage import Stage, to_stage
-from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
+from ..utils import UNDEFINED, curry_stage
 
 
 @curry_stage
@@ -44,10 +46,7 @@ def each(
         out_pickled=False,
         has_index=stage.has_index,
     )
-    schema = harness.output_schema(None, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(fn, schema=schema)
-    out = Stage(df, scalar=True, pickled=True)
+    out = harness.lower(stage, fn, harness.output_schema(None, stage.has_index), True)
     if run:
         from .run import run as _run
 

@@ -3,8 +3,10 @@
 through untouched.
 
 Column fast path → Catalyst ``Filter`` (pushes down to the scan when the
-stage is a file source). General path → boolean-mask inside ``mapInPandas``
-so the original (possibly pickled) values are re-emitted unchanged.
+stage is a file source). General path → one harness apply that
+boolean-masks each batch, so the original (possibly pickled) values are
+re-emitted unchanged; ``harness.lower`` runs it in the same
+``mapInPandas`` as the input's Python chain.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ import typing as tp
 
 from .. import harness
 from ..stage import Stage, to_stage
-from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
+from ..utils import UNDEFINED, VALUE_COL, curry_stage
 from . import _common
 
 
@@ -31,7 +33,9 @@ def filter(  # noqa: A001
     stage = to_stage(stage)
 
     if _common.is_column(f):
-        return Stage(stage.df.filter(f), scalar=stage.scalar, pickled=stage.pickled)
+        return Stage(
+            stage.df.filter(f), scalar=stage.scalar, pickled=stage.pickled, in_order=stage.in_order
+        )
 
     fn = harness.make_apply(
         f,
@@ -45,7 +49,5 @@ def filter(  # noqa: A001
         out_pickled=stage.pickled,
         has_index=stage.has_index,
     )
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df_in = stage.df.select(*cols)
-    df = df_in.mapInPandas(fn, schema=df_in.schema)
-    return Stage(df, scalar=True, pickled=stage.pickled)
+    schema = harness.output_schema(stage.df.schema[VALUE_COL].dataType, stage.has_index)
+    return harness.lower(stage, fn, schema, stage.pickled)

@@ -9,8 +9,9 @@ Lowerings:
 - **Column fast path**: pass an array Column → ``posexplode`` where the
   emitted ``pos`` IS the appended index component.
 - **General path**: Python callable returning an iterable (task mode also
-  accepts async generators, reference task/api/flat_map.py:24-46) →
-  ``mapInPandas`` yielding multiple rows per input.
+  accepts async generators, reference task/api/flat_map.py:24-46) → one
+  harness apply yielding multiple rows per input, handed to
+  ``harness.lower`` so it shares the input chain's ``mapInPandas``.
 
 flat_map subsumes map+filter (reference notes this at flat_map.py:93-100):
 return [y] to map, [] to drop.
@@ -52,7 +53,7 @@ def flat_map(
             )
         else:
             df = stage.df.select(F.posexplode(f).alias("_pos", VALUE_COL)).drop("_pos")
-        return Stage(df, scalar=True, pickled=False)
+        return Stage(df, scalar=True, pickled=False, in_order=stage.in_order)
 
     out_type = _common.parse_returns(returns)
     if out_type is None:
@@ -72,6 +73,4 @@ def flat_map(
         has_index=stage.has_index,
     )
     schema = harness.output_schema(out_type, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(fn, schema=schema)
-    return Stage(df, scalar=True, pickled=out_pickled)
+    return harness.lower(stage, fn, schema, out_pickled)

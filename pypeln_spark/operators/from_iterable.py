@@ -7,7 +7,9 @@ creation-order index ``(i,)`` exactly like the reference
 
 Lowering: a BOUNDED iterable is drained driver-side into an Arrow-backed
 ``createDataFrame`` (typed column when every element maps onto one Spark
-type, pickled BinaryType otherwise — see infer.py). The reference's
+type, pickled BinaryType otherwise — see infer.py). Its Stage is
+``in_order``: partitions hold consecutive slices of the list, so a later
+``ordered`` needs no sort. The reference's
 ``use_thread``/``maxsize`` knobs control queue plumbing that Spark doesn't
 have; they are accepted and ignored for API parity on the bounded path.
 
@@ -334,4 +336,4 @@ def from_iterable(
         for i, v in enumerate(values)
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    return Stage(df, scalar=True, pickled=pickled)
+    return Stage(df, scalar=True, pickled=pickled, in_order=True)

@@ -7,10 +7,12 @@ order downstream.
 Two lowerings:
 - **Column fast path**: ``pl.map(F.col("value") * 2, data)`` → a pure
   Catalyst projection (whole-stage codegen, zero Python).
-- **General path**: arbitrary Python callable → Arrow-batched ``mapInPandas``
-  through the lifecycle/DI/timeout harness (harness.py). Output type comes
-  from ``returns=`` or a one-element driver-side sample call; untypable
-  results fall back to pickled BinaryType.
+- **General path**: arbitrary Python callable → one apply of the
+  lifecycle/DI/timeout harness, handed to ``harness.lower``: it joins the
+  input's Python chain when there is one, so consecutive general-path
+  operators share one Arrow-batched ``mapInPandas``. Output type comes
+  from ``returns=`` or a driver-side sample call; untypable results fall
+  back to pickled BinaryType.
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ def map(  # noqa: A001
 
     if _common.is_column(f):
         cols = ([INDEX_COL] if stage.has_index else []) + [f.alias(VALUE_COL)]
-        return Stage(stage.df.select(*cols), scalar=True, pickled=False)
+        return Stage(stage.df.select(*cols), scalar=True, pickled=False, in_order=stage.in_order)
 
     out_type = _common.parse_returns(returns)
     if out_type is None:
@@ -59,6 +61,4 @@ def map(  # noqa: A001
         has_index=stage.has_index,
     )
     schema = harness.output_schema(out_type, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(fn, schema=schema)
-    return Stage(df, scalar=True, pickled=out_pickled)
+    return harness.lower(stage, fn, schema, out_pickled)

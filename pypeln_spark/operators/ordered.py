@@ -7,6 +7,21 @@ disk spill — strictly stronger: no OOM cliff, scales to any input. Arrays of
 bigint compare lexicographically in Catalyst, which is exactly the
 reference's ``Element.index`` total order (docs/advanced.md:120).
 
+The sort is skipped when the input Stage is ``in_order``: its rows, read
+partition by partition, already come in ascending ``_index`` order. That
+holds straight after the bounded ``from_iterable`` (partitions are
+consecutive slices of the list), after ``ordered`` itself, and through any
+chain of element-wise operators on such a Stage, because none of them
+reorders rows inside a partition: every harness mode emits results in
+input order (plain loop, ``ThreadPoolExecutor.map``, ``asyncio.gather``),
+filters keep survivors in place, and ``flat_map`` children ``[i, j]``
+follow their parent ``[i]`` right where it stood. Anything else —
+``concat``, ``with_index``, a ``Stage(df)`` source, a DataFrame
+passthrough such as ``repartition`` — is not ``in_order`` and is sorted.
+Skipping the sort also saves its second evaluation of the input: Spark
+runs a range-partitioned sort's input once to sample bounds and once to
+shuffle.
+
 Streaming caveat: a global sort is only defined per-microbatch — use
 ``foreachBatch`` for that (SURVEY.md §7.3).
 """
@@ -30,8 +45,11 @@ def ordered(stage: tp.Any = UNDEFINED, maxsize: int = 0) -> Stage:  # noqa: ARG0
             "from_iterable carry it automatically, table stages can declare "
             "one with Stage.with_index(*key_cols)"
         )
+    if stage.in_order:
+        return stage
     return Stage(
         stage.df.orderBy(F.col(INDEX_COL).asc()),
         scalar=stage.scalar,
         pickled=stage.pickled,
+        in_order=True,
     )

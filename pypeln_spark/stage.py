@@ -8,6 +8,17 @@ A Stage wraps a (lazy) Spark DataFrame plus two bits of payload metadata:
 - ``pickled``: the ``value`` column holds pickled Python objects (opaque
   fallback; see infer.py).
 
+and two bits of plan metadata:
+
+- ``chain``: set only by ``harness.lower`` — the ``(base, applies)`` pair
+  behind this Stage's single ``mapInPandas``, so the next Python operator
+  composes onto it instead of adding another Python pass.
+- ``in_order``: rows read partition by partition already come in ascending
+  ``_index`` order. Set only by the bounded ``from_iterable`` path and by
+  ``ordered``; ``harness.lower`` and the Column fast paths carry it over.
+  Every other way of building a Stage (passthrough, ``with_index``,
+  ``concat``, ``Stage(df)``) leaves it False, so ``ordered`` sorts.
+
 The DataFrame's logical plan IS the pipeline DAG — where the reference wires
 ``IterableQueue``s between Stage dataclasses (pypeln/process/stage.py:29-67),
 we just compose Catalyst plans and let Spark schedule. Re-using one Stage as
@@ -29,8 +40,18 @@ from .utils import INDEX_COL, VALUE_COL, Partial
 
 
 class Stage:
-    def __init__(self, df: DataFrame, scalar: bool | None = None, pickled: bool = False):
+    def __init__(
+        self,
+        df: DataFrame,
+        scalar: bool | None = None,
+        pickled: bool = False,
+        *,
+        chain: tp.Optional[tp.Tuple[DataFrame, tp.Tuple[tp.Callable, ...]]] = None,
+        in_order: bool = False,
+    ):
         self.df = df
+        self.chain = chain
+        self.in_order = in_order
         cols = df.columns
         payload = [c for c in cols if c != INDEX_COL]
         self.scalar = scalar if scalar is not None else payload == [VALUE_COL]

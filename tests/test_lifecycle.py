@@ -191,6 +191,15 @@ def test_task_mode_filter_timeout_drops_element(spark):
     assert out == [0, 2]
 
 
+def test_task_mode_async_filter_element_index(spark):
+    """Async predicates get element_index injected, like every other mode."""
+
+    async def keep(x, element_index):
+        return element_index[0] % 2 == 0
+
+    assert list(pl.task.filter(keep, list("abcd")) | pl.ordered()) == ["a", "c"]
+
+
 def test_task_mode_async_gen_timeout_drops_element(spark):
     """ADVICE r1: the async-generator flat_map path gets one timeout budget
     for the whole generator consumption."""
@@ -207,6 +216,24 @@ def test_task_mode_async_gen_timeout_drops_element(spark):
     assert out == [0, 2, 100, 102]
 
 
+def test_array_values_reach_f_as_lists(spark):
+    """f gets Python lists for array values, nested ones included, both
+    inside a fused chain and across an Arrow boundary (a Stage(df) with an
+    array ``value`` column)."""
+    fused = pl.map(lambda x: x + [0], pl.map(lambda x: [x, x], [1, 2]))
+    assert list(fused | pl.ordered()) == [[1, 1, 0], [2, 2, 0]]
+
+    df = spark.createDataFrame(
+        [([[1], [2, 3]], {"k": [4]})], "value array<array<long>>, m map<string,array<long>>"
+    )
+    nested = pl.to_stage(df.select("value"))
+    assert list(pl.map(lambda x: x + [[0]], nested)) == [[[1], [2, 3], [0]]]
+    kinds = pl.map(lambda x: [type(x).__name__, type(x[0]).__name__], nested)
+    assert list(kinds) == [["list", "list"]]
+    mapped = pl.to_stage(df.select(df.m.alias("value")))
+    assert list(pl.map(lambda d: d["k"] + [5], mapped)) == [[4, 5]]
+
+
 def test_thread_mode_concurrent_io(spark):
     def f(x):
         time.sleep(0.3)
@@ -218,6 +245,71 @@ def test_thread_mode_concurrent_io(spark):
     elapsed = time.time() - t0
     assert out == data
     assert elapsed < 6, f"thread concurrency not effective: {elapsed:.1f}s"
+
+
+def test_fused_chain_lifecycle_per_op(spark, tmp_path):
+    """A fused chain runs every op's on_start/on_done once per partition,
+    and each op's summed stage_status.processed equals that op's input."""
+    import json
+
+    def hooks(op):
+        def record(event, partition, processed):
+            with open(tmp_path / f"{op}.{event}.{partition}", "a") as fh:
+                fh.write(json.dumps(processed) + "\n")
+
+        def on_start(worker_info):
+            record("start", worker_info.index, 0)
+
+        def on_done(stage_status, worker_info):
+            record("done", worker_info.index, stage_status.processed)
+
+        return {"on_start": on_start, "on_done": on_done}
+
+    n = 24
+    src = pl.from_iterable(range(n))
+    parts = src.df.rdd.getNumPartitions()
+    st = (
+        src
+        | pl.map(lambda x: x + 1, returns="long", **hooks("map"))
+        | pl.thread.filter(lambda x: x % 2 == 0, workers=2, **hooks("filter"))
+        | pl.flat_map(lambda x: [x, x], returns="long", **hooks("flat_map"))
+    )
+    assert st.df._jdf.queryExecution().executedPlan().toString().count("MapInPandas") == 1
+    assert sorted(st) == sorted(y for x in range(1, n + 1) if x % 2 == 0 for y in (x, x))
+
+    inputs = {"map": n, "filter": n, "flat_map": n // 2}
+    for op, n_in in inputs.items():
+        for event in ("start", "done"):
+            files = sorted(tmp_path.glob(f"{op}.{event}.*"))
+            assert sorted(int(f.suffix[1:]) for f in files) == list(range(parts)), (op, event)
+            lines = [f.read_text().splitlines() for f in files]
+            assert all(len(ls) == 1 for ls in lines), (op, event, lines)
+        processed = [json.loads(f.read_text()) for f in tmp_path.glob(f"{op}.done.*")]
+        assert sum(processed) == n_in, (op, processed)
+
+
+def test_fused_chain_middle_op_timeout_and_error(spark):
+    """Inside one fused chain a timeout in the middle op drops only that
+    element, and an exception in the middle op surfaces its type."""
+
+    def slow(x):
+        if x == 2:
+            time.sleep(5)
+        return x * 10
+
+    st = pl.map(lambda x: x, list(range(6)), returns="long")
+    out = st | pl.map(slow, timeout=1.0, returns="long") | pl.map(lambda x: x + 1, returns="long")
+    assert sorted(out) == [1, 11, 31, 41, 51]
+
+    def boom(x):
+        if x == 3:
+            raise KeyError("middle")
+        return x
+
+    bad = st | pl.map(boom, returns="long") | pl.map(lambda x: x + 1, returns="long")
+    with pytest.raises(Exception) as exc_info:
+        list(bad)
+    assert "KeyError" in str(exc_info.value)
 
 
 def test_map_rows_with_inference_and_lifecycle(spark, sf_dir):

@@ -177,8 +177,10 @@ def test_all_mode_orderings_chain(spark):
         inc = a_inc if m3 == "task" else (lambda x: x + 1)
         f3 = modes[m3].map(inc, returns="long")
         f4 = pl.map(lambda x: x * 10, returns="long")
-        out = range(6) | f1 | f2 | f3 | f4 | pl.ordered() | list
-        assert out == expected, (m1, m2, m3)
+        st = range(6) | f1 | f2 | f3 | f4 | pl.ordered()
+        plan = st.df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, (m1, m2, m3, plan)
+        assert list(st) == expected, (m1, m2, m3)
 
 
 def test_partial_composition(spark):

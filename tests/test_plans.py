@@ -550,3 +550,98 @@ def test_plan_lint_whole_registry(spark):
         if v:
             violations[name] = v
     assert not violations, violations
+
+
+def _executed(stage) -> str:
+    return stage.df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_python_chain_fuses_and_ordered_skips_sort(spark):
+    """Consecutive general-path operators lower to ONE MapInPandas over the
+    source scan; straight after from_iterable no operator reorders rows, so
+    ordered plans no Sort and no Exchange and still returns creation order."""
+    import pypeln_spark as pl
+
+    xs = [7, -3, 10, 0, 4, 15, -8, 2, 9, 5, 11]
+    st = (
+        pl.from_iterable(xs)
+        | pl.process.map(lambda x: 3 * x + 1)
+        | pl.filter(lambda x: x % 5 != 0)
+        | pl.flat_map(lambda x: [x, -x])
+        | pl.ordered()
+    )
+    plan = _executed(st)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Sort" not in plan and "Exchange" not in plan, plan
+    want = [y for x in xs for y in (3 * x + 1, -(3 * x + 1)) if (3 * x + 1) % 5 != 0]
+    assert list(st) == want
+    assert list(pl.to_iterable(st, maxsize=1)) == want
+
+
+def test_ordered_sorts_when_creation_order_is_unknown(spark):
+    """Every Stage not known to be in index order keeps the global sort:
+    concat, Stage.with_index, a Stage(df) source and a DataFrame
+    passthrough."""
+    import pypeln_spark as pl
+    from pyspark.sql import functions as F
+
+    a = pl.from_iterable(range(0, 12, 2)) | pl.map(lambda x: x + 1)
+    b = pl.from_iterable(range(1, 12, 2)) | pl.flat_map(lambda x: [x, x])
+    st = pl.concat([a, b]) | pl.ordered()
+    assert "Sort" in _executed(st)
+    # index (i,) from a sorts before its children (i, 0), (i, 1) from b
+    assert list(st) == [2 * i + 1 for i in range(6) for _ in range(3)]
+
+    keyed = spark.createDataFrame([(k, f"v{k}") for k in range(9, -1, -1)], "k long, value string")
+    st = pl.to_stage(keyed.repartition(3)).with_index("k") | pl.ordered()
+    assert "Sort" in _executed(st)
+    assert [r["k"] for r in st] == list(range(10))
+
+    indexed = keyed.select(F.array("k").alias("_index"), "value")
+    st = pl.to_stage(indexed) | pl.map(lambda v: v.upper()) | pl.ordered()
+    assert "Sort" in _executed(st)
+    assert list(st) == [f"V{k}" for k in range(10)]
+
+    st = pl.from_iterable(range(30)).repartition(3) | pl.ordered()
+    assert "Sort" in _executed(st)
+    assert list(st) == list(range(30))
+
+
+def test_one_stage_feeds_two_fused_chains(spark):
+    """Fan-out from a fused Stage: each consumer composes onto its own copy
+    of the chain, so neither sees the other's operators."""
+    import pypeln_spark as pl
+
+    src = pl.from_iterable(range(10)) | pl.map(lambda x: x + 1)
+    doubled = src | pl.map(lambda x: x * 2)
+    negated = src | pl.filter(lambda x: x % 2 == 0) | pl.map(lambda x: -x)
+    assert len(src.chain[1]) == 1
+    assert len(doubled.chain[1]) == 2 and len(negated.chain[1]) == 3
+    for st in (doubled, negated):
+        assert _executed(st).count("MapInPandas") == 1
+    assert list(doubled | pl.ordered()) == [2 * (x + 1) for x in range(10)]
+    assert list(negated | pl.ordered()) == [-(x + 1) for x in range(10) if (x + 1) % 2 == 0]
+    assert list(src | pl.ordered()) == [x + 1 for x in range(10)]
+
+
+def test_cached_stage_starts_a_new_chain(spark):
+    """A Stage whose DataFrame is cached is read from the cache by the next
+    Python operator instead of having its chain re-run inside it."""
+    import pypeln_spark as pl
+
+    calls = pl.shared.counter(spark)
+
+    def f(x):
+        calls.add(1)
+        return x + 1
+
+    src = pl.map(f, list(range(10)), returns="long")
+    src.df.cache()
+    try:
+        assert src.df.count() == 10
+        out = src | pl.map(lambda x: x * 2, returns="long")
+        assert "InMemoryTableScan" in _executed(out)
+        assert sorted(out) == [2 * (x + 1) for x in range(10)]
+        assert calls.value == 10
+    finally:
+        src.df.unpersist()
